@@ -20,6 +20,12 @@ echo "preflight OK: main + test sources compile"
 # footer at every SF against the pinned snapshot — fail loudly, by name.
 python3 scripts/check_footers.py
 
+# Benchmark pure-part tests (perfbench/: the SSE generator, the
+# frame-to-trigger mapping, the tail-percentile rule) — a generator or
+# stats regression fails here, before any benchmark run.
+python3 -m unittest discover -s perfbench -p 'test_*.py'
+echo "preflight OK: benchmark pure-part tests"
+
 SMOKE_QUERIES="q01_pricing_summary,q17b_asof_custom_operator,q59_interval_join_attribution,q63_time_range_join,q95_sliding_time_window,q97_data_profile"
 SMOKE_DIR=$(mktemp -d /tmp/preflight_smoke.XXXXXX)
 trap 'rm -rf "$SMOKE_DIR"' EXIT

@@ -1733,8 +1733,7 @@ object DedupOps {
             (coalesce($"min_nbr", $"label") < $"label").as("__chg")),
         sum(when($"__chg", 1L).otherwise(0L)))
       val changed =
-        if (obsChanged >= 0L) obsChanged
-        else next.filter($"__chg").count()
+        if (obsChanged >= 0L) obsChanged else changedRows(next)
       labels = next.select($"doc_id", $"label")
       converged = changed == 0L
     }
@@ -1803,6 +1802,25 @@ object DedupOps {
        |GROUP BY n_docs
        |ORDER BY cluster_size""".stripMargin
 
+  /** EAGER lineage cut of `df` with its row count riding the checkpoint
+    * materialization as an observe metric (r18, guide §1.2): the
+    * two-star convergence test needs |e| and |eS| every round, and
+    * reading them off the checkpoint action costs no count scan. A
+    * missed observation falls back to [[recount]]. */
+  private[graft] def countedCut(df: DataFrame): (DataFrame, Long) = {
+    val (c, n) = Lineage.cutWithMetric(df, count(lit(1)))
+    (c, if (n >= 0L) n else recount(c))
+  }
+
+  /** [[countedCut]]'s fallback: the row count recomputed from the cut
+    * frame's checkpointed blocks. */
+  private[graft] def recount(cut: DataFrame): Long = cut.count()
+
+  /** q71's fallback when a round's observed change count is missing:
+    * the `__chg`-flagged rows recounted from the cut frame. */
+  private[graft] def changedRows(next: DataFrame): Long =
+    next.filter(col("__chg")).count()
+
   // --------------------------------------------------------------- q71b
   /** Alternating large-star/small-star contraction (Kiveris et al. 2014,
     * "Connected Components in MapReduce and Beyond") — the adversarial-
@@ -1830,17 +1848,7 @@ object DedupOps {
       maxRounds: Int = 50): (DataFrame, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
-    // every frame's row count rides its checkpoint materialization as an
-    // observe metric (r18, guide §1.2): the convergence test below needs
-    // |e| and |eS| every round, and reading them off the checkpoint
-    // action replaces the count scans per round the previous shape
-    // paid (a missed observation recomputes from the cut blocks — the
-    // pre-r18 probe)
-    def counted(df: DataFrame): (DataFrame, Long) = {
-      val (c, n) = Lineage.cutWithMetric(df, count(lit(1)))
-      (c, if (n >= 0L) n else c.count())
-    }
-    var (e, cntE) = counted(edges0
+    var (e, cntE) = countedCut(edges0
       .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v"))
       .filter($"u" =!= $"v").distinct())
     var rounds = 0
@@ -1862,7 +1870,7 @@ object DedupOps {
         .filter($"u" =!= $"v").distinct()
       // SMALL-STAR over the (already larger→smaller) directed edges
       val minsS = eL.groupBy($"u").agg(min($"v").as("m"))
-      val (eS, cntS) = counted(eL.join(minsS, "u").filter($"v" =!= $"m")
+      val (eS, cntS) = countedCut(eL.join(minsS, "u").filter($"v" =!= $"m")
         .select($"v".as("u"), $"m".as("v"))
         .union(minsS.select($"u", $"m".as("v")))
         .distinct())

@@ -76,14 +76,6 @@ private[graft] object Lineage {
       agg: org.apache.spark.sql.Column): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val c = cut(df.observe(obs, agg.as("__m")), eager = true)
-    val v =
-      try {
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Option(scala.concurrent.Await.result(
-          scala.concurrent.Future(obs.get),
-          scala.concurrent.duration.Duration(30, "s"))("__m"))
-          .fold(0L)(_.asInstanceOf[Long])
-      } catch { case _: java.util.concurrent.TimeoutException => -1L }
-    (c, v)
+    (c, graft.Observed.observedLong(obs)(-1L))
   }
 }

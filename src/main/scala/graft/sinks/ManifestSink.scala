@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Observed.{longOr0, observed, observedLong}
+
 /** Manifest-committed parquet sink: snapshot isolation without renaming
   * data files.
   *
@@ -534,12 +536,8 @@ object ManifestSink {
   }
 
   /** Write `df` to `dataDir` and return the exact row count, observed
-    * as an accumulator on the write job itself -- no second pass, no
-    * extra job. The observation result arrives via the listener bus,
-    * which can drop events under extreme driver load; rather than hang
-    * the commit path on `Observation.get`'s unbounded wait, a bounded
-    * wait falls back to counting the written files (one cheap parquet
-    * metadata pass over the batch just written). */
+    * on the write job itself -- no second pass, no extra job (see
+    * [[writeWithStats]] for the fallback). */
   private def writeCounted(df: DataFrame, dataDir: String): Long =
     writeWithStats(df, dataDir, Nil, Nil)._1
 
@@ -550,24 +548,16 @@ object ManifestSink {
     * stats family, costing one extra full batch read per commit at scale
     * and 1-2 extra Spark actions locally. Values are identical to the
     * read-back by construction — the metrics see the same rows the files
-    * hold, min/max typing mirrors [[batchStats]], and the KMV sketch is
-    * partitioning-independent. Families that need a post-hoc shape
-    * (blooms sized from the observed count, exact top-k, histograms)
-    * still read back — see [[writtenStats]]. Falls back to the read-back
-    * path if the observation does not arrive (listener-bus stall). */
-  private def writeWithStats(df: DataFrame, dataDir: String,
+    * hold, min/max typing is [[FooterStats.statsTag]]'s, and the KMV
+    * sketch is partitioning-independent. Families that need a post-hoc
+    * shape (blooms sized from the observed count, exact top-k,
+    * histograms) still read back — see [[writtenStats]]. Falls back to
+    * [[readBackStats]] if the observation does not arrive. */
+  private[graft] def writeWithStats(df: DataFrame, dataDir: String,
       statsCols: Seq[String], ndvCols: Seq[String])
       : (Long, Map[String, ColStats]) = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    import org.apache.spark.sql.types._
-    val typed = statsCols.flatMap { c =>
-      df.schema.find(_.name == c).flatMap(f => f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => Some(c -> 'L')
-        case FloatType | DoubleType                        => Some(c -> 'D')
-        case StringType                                    => Some(c -> 'S')
-        case _                                             => None
-      })
-    }
+    val typed = FooterStats.tagged(df.schema, statsCols)
     val metrics: Seq[org.apache.spark.sql.Column] =
       count(lit(1)).as("__n") +:
         (typed.flatMap { case (c, _) =>
@@ -577,36 +567,35 @@ object ManifestSink {
               df(c).cast("string")), NdvSketchK).as(s"__kmv_$c")))
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, metrics.head, metrics.tail: _*).write.parquet(dataDir)
-    try {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val row = scala.concurrent.Await.result(
-        scala.concurrent.Future(obs.get),
-        scala.concurrent.duration.Duration(30, "s"))
-      val mm = typed.flatMap { case (c, tag) =>
-        (row(s"__mn_$c"), row(s"__mx_$c")) match {
-          case (null, _) | (_, null) => None // all-null batch: no stats
-          case (mn, mx) => Some(c -> ColStats(tag, boundStr(mn), boundStr(mx)))
-        }
-      }.toMap
-      val kmv = ndvCols.map { c =>
-        val arr = row(s"__kmv_$c").asInstanceOf[scala.collection.Seq[Long]]
-        val bb = java.nio.ByteBuffer.allocate(8 * arr.size)
-        arr.foreach(bb.putLong)
-        kmvKey(c) -> ColStats('V',
-          java.util.Base64.getEncoder.encodeToString(bb.array()),
-          NdvSketchK.toString)
-      }.toMap
-      (row("__n").asInstanceOf[Long], mm ++ kmv)
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        val spark = df.sparkSession
-        val written = spark.read.parquet(dataDir)
-        (written.count(),
-          (if (typed.isEmpty) Map.empty[String, ColStats]
-           else batchStats(written, statsCols)) ++
-            batchNdvSketches(written, ndvCols))
-    }
+    observed(obs) { row =>
+      val mm = typed.flatMap { case (c, tag) => minMaxStat(c, tag,
+        row.getAs[Any](s"__mn_$c"), row.getAs[Any](s"__mx_$c")) }.toMap
+      val kmv = ndvCols.map(c => kmvStat(c, row.getSeq[Long](
+        row.fieldIndex(s"__kmv_$c")))).toMap
+      (row.getAs[Long]("__n"), mm ++ kmv)
+    }(readBackStats(df.sparkSession.read.parquet(dataDir), statsCols,
+      ndvCols))
   }
+
+  /** [[writeWithStats]]'s fallback: the same (row count, min/max + NDV
+    * stats) read back from the written files — count and min/max in ONE
+    * aggregate ([[groupedStatsWithCount]] over a constant key), the KMV
+    * sketches in one more when requested. */
+  private[graft] def readBackStats(written: DataFrame,
+      statsCols: Seq[String], ndvCols: Seq[String])
+      : (Long, Map[String, ColStats]) = {
+    val (n, mm) = groupedStatsWithCount(written,
+      org.apache.spark.sql.functions.lit(0), statsCols)
+      .getOrElse("0", 0L -> Map.empty[String, ColStats])
+    (n, mm ++ batchNdvSketches(written, ndvCols))
+  }
+
+  /** Min/max stats entry of column `c`, or None when the batch holds no
+    * non-null value (the aggregate's null bounds). */
+  private def minMaxStat(c: String, tag: Char, mn: Any,
+      mx: Any): Option[(String, ColStats)] =
+    if (mn == null || mx == null) None
+    else Some(c -> ColStats(tag, boundStr(mn), boundStr(mx)))
 
   private def rowsStat(n: Long): (String, ColStats) =
     RowsKey -> ColStats('L', n.toString, n.toString)
@@ -862,7 +851,7 @@ object ManifestSink {
     val (rows, writeStats) = writeWithStats(df, dataDir, statsCols, Nil)
     val stats = writeStats +
       rowsStat(rows) ++
-      writtenStats(spark, dataDir, Nil, bloomCols, bloomFpp,
+      writtenStats(spark, dataDir, bloomCols, bloomFpp,
         knownRows = Some(rows))
     val rewriteLines = baseEntries :+ Entry(s"data/$batch", stats).line
     if (maintenance)
@@ -879,59 +868,29 @@ object ManifestSink {
     next
   }
 
-  /** Stats read back from the WRITTEN files (a cheap columnar min/max
-    * scan), not from the source frame — re-evaluating an expensive
-    * upstream plan just to learn its bounds would double the batch cost.
-    * The read-back (file listing + footer inference) only happens when
-    * some stats were requested: the plain-append hot path pays nothing. */
+  /** Stats families that need a post-hoc shape (blooms sized from the
+    * observed count, exact top-k, histograms), read back from the
+    * WRITTEN files, not from the source frame — re-evaluating an
+    * expensive upstream plan just to learn them would double the batch
+    * cost. The read-back (file listing + footer inference) only happens
+    * when some family was requested: the plain-append hot path pays
+    * nothing. */
   private def writtenStats(spark: SparkSession, dataDir: String,
-      statsCols: Seq[String], bloomCols: Seq[String],
-      bloomFpp: Double, ndvCols: Seq[String] = Nil,
+      bloomCols: Seq[String], bloomFpp: Double,
       topKCols: Seq[String] = Nil,
       tokenBloomCols: Seq[String] = Nil,
       histCols: Seq[String] = Nil,
       knownRows: Option[Long] = None): Map[String, ColStats] =
-    if (statsCols.isEmpty && bloomCols.isEmpty && ndvCols.isEmpty &&
-        topKCols.isEmpty && tokenBloomCols.isEmpty && histCols.isEmpty)
+    if (bloomCols.isEmpty && topKCols.isEmpty && tokenBloomCols.isEmpty &&
+        histCols.isEmpty)
       Map.empty
     else {
       val written = spark.read.parquet(dataDir)
-      (if (statsCols.isEmpty) Map.empty[String, ColStats]
-       else batchStats(written, statsCols)) ++
-        batchBlooms(written, bloomCols, bloomFpp, knownRows) ++
-        batchNdvSketches(written, ndvCols) ++
+      batchBlooms(written, bloomCols, bloomFpp, knownRows) ++
         batchTopK(written, topKCols) ++
         batchTokenBlooms(written, tokenBloomCols, bloomFpp) ++
         batchHistograms(written, histCols)
     }
-
-  /** Per-column min/max of one written batch, for columns whose type the
-    * stats codec supports (integral → L, float/double → D, string → S).
-    * Unsupported types and all-null columns get no stats — the entry then
-    * simply never prunes on that column. */
-  private def batchStats(batch: DataFrame,
-      statsCols: Seq[String]): Map[String, ColStats] = {
-    import org.apache.spark.sql.functions.{max, min}
-    import org.apache.spark.sql.types._
-    val typed = statsCols.flatMap { c =>
-      batch.schema.find(_.name == c).flatMap(f => f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => Some(c -> 'L')
-        case FloatType | DoubleType                        => Some(c -> 'D')
-        case StringType                                    => Some(c -> 'S')
-        case _                                             => None
-      })
-    }
-    if (typed.isEmpty) return Map.empty
-    val aggs = typed.flatMap { case (c, _) =>
-      Seq(min(batch(c)).as(s"__mn_$c"), max(batch(c)).as(s"__mx_$c")) }
-    val row = batch.agg(aggs.head, aggs.tail: _*).head()
-    typed.flatMap { case (c, tag) =>
-      val mn = row.getAs[Any](s"__mn_$c")
-      val mx = row.getAs[Any](s"__mx_$c")
-      if (mn == null || mx == null) None // all-null batch: no stats
-      else Some(c -> ColStats(tag, boundStr(mn), boundStr(mx)))
-    }.toMap
-  }
 
   /** Per-column bloom filters of one written batch (tag 'B' pseudo-stats
     * under [[bloomKey]]): the EQUALITY-pruning complement to min/max
@@ -942,23 +901,19 @@ object ManifestSink {
     * columns only (the types its hasher and ours agree on). */
   private def batchBlooms(written: DataFrame, bloomCols: Seq[String],
       fpp: Double, knownRows: Option[Long] = None): Map[String, ColStats] = {
-    import org.apache.spark.sql.types._
     if (bloomCols.isEmpty) return Map.empty
     // the commit path already observed the batch's exact row count on
     // the write job — sizing the filter from it skips a whole count job
     // per bloom-carrying commit (r18, guide §1.2)
     val n = math.max(1L, knownRows.getOrElse(written.count()))
-    bloomCols.flatMap { c =>
-      written.schema.find(_.name == c).flatMap(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | StringType =>
-          val bf = written.stat.bloomFilter(c, n, fpp)
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          Some(bloomKey(c) -> ColStats('B',
-            java.util.Base64.getEncoder.encodeToString(bos.toByteArray), ""))
-        case _ => None
-      })
-    }.toMap
+    FooterStats.tagged(written.schema, bloomCols).filter(_._2 != 'D')
+      .map { case (c, _) =>
+        val bf = written.stat.bloomFilter(c, n, fpp)
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        bloomKey(c) -> ColStats('B',
+          java.util.Base64.getEncoder.encodeToString(bos.toByteArray), "")
+      }.toMap
   }
 
   /** Stats-map key holding a TOKEN bloom of a text column (tag 'B', same
@@ -1032,13 +987,16 @@ object ManifestSink {
       NdvSketchK).as(c))
     val row = written.agg(aggs.head, aggs.tail: _*).collect().head
     ndvCols.zipWithIndex.map { case (c, i) =>
-      val arr = row.getSeq[Long](i)
-      val bb = java.nio.ByteBuffer.allocate(8 * arr.size)
-      arr.foreach(bb.putLong)
-      kmvKey(c) -> ColStats('V',
-        java.util.Base64.getEncoder.encodeToString(bb.array()),
-        NdvSketchK.toString)
-    }.toMap
+      kmvStat(c, row.getSeq[Long](i)) }.toMap
+  }
+
+  /** Manifest entry of column `c`'s KMV sketch (tag 'V'). */
+  private def kmvStat(c: String, arr: Seq[Long]): (String, ColStats) = {
+    val bb = java.nio.ByteBuffer.allocate(8 * arr.size)
+    arr.foreach(bb.putLong)
+    kmvKey(c) -> ColStats('V',
+      java.util.Base64.getEncoder.encodeToString(bb.array()),
+      NdvSketchK.toString)
   }
 
   /** Stats-map key holding a column's heavy-hitter list (tag 'T',
@@ -1133,15 +1091,12 @@ object ManifestSink {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, col, count, lit,
       min, sum, when}
-    import org.apache.spark.sql.types._
     val B = HistBuckets
-    val tag = df.schema.find(_.name == c).flatMap(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => Some('L')
-      case FloatType | DoubleType                        => Some('D')
-      case _                                             => None
-    })
+    // numeric columns only: histogram buckets need arithmetic bounds
+    val tag = FooterStats.tagged(df.schema, Seq(c)).map(_._2)
+      .filter(_ != 'S')
     if (tag.isEmpty) return Map.empty
-    val t = tag.get
+    val t = tag.head
     val vals = df.filter(col(c).isNotNull)
       .groupBy(groupKey.cast("string").as("__g"),
         col(c).cast(if (t == 'L') "long" else "double").as("__v"))
@@ -1555,9 +1510,9 @@ object ManifestSink {
       writeWithStats(df, dataDir, statsCols, ndvCols)
     val line = Entry(s"data/$batch",
       writeStats ++
-        writtenStats(spark, dataDir, Nil, bloomCols, bloomFpp,
-          Nil, topKCols, tokenBloomCols, histCols,
-          knownRows = Some(rows)) + rowsStat(rows)).line
+        writtenStats(spark, dataDir, bloomCols, bloomFpp, topKCols,
+          tokenBloomCols, histCols, knownRows = Some(rows)) +
+        rowsStat(rows)).line
     commitAppendLines(spark, dir, Seq(line), header)
   }
 
@@ -1759,7 +1714,7 @@ object ManifestSink {
     // chunk statistics — e.g. >4 KB string bounds the writer drops).
     val wantStats = (statsCols :+ partCol).distinct
     val perPart = footerGroupedStats(spark, staging, subdirs.toSeq,
-        wantStats, df.schema).getOrElse {
+        FooterStats.tagged(df.schema, wantStats)).getOrElse {
       val written = spark.read.parquet(staging)
         .withColumn("__sd",
           regexp_extract(input_file_name(), "(__p=[^/]+)/[^/]+$", 1))
@@ -1774,137 +1729,22 @@ object ManifestSink {
   }
 
   /** Per-subdir (row count, min/max stats) of a just-written partitioned
-    * staging dir, derived from the parquet FOOTERS alone — the
-    * lakehouse-format move (Delta/Iceberg collect file stats from
-    * metadata, never by re-reading data). EXACT-PARITY CONTRACT with
-    * [[groupedStatsWithCount]], enforced by returning None (caller falls
-    * back to the read-back) whenever parity cannot be proven:
-    *
-    *  - only 'L' (integral) and 'S' (string) stats columns ride footers:
-    *    float/double footer stats have writer-dependent NaN/-0.0
-    *    handling, so a 'D'-tagged request bails out;
-    *  - integral footer min/max are exact; string min/max use the
-    *    writer's unsigned-lexicographic UTF-8 comparator — the same
-    *    ordering Spark's UTF8String min/max use — and parquet-mr drops
-    *    (rather than truncates) footer binary stats above 4 KB, which
-    *    surfaces as hasNonNullValue=false on a chunk with non-null
-    *    values and triggers the bail-out;
-    *  - an all-null column in a subdir yields no stats entry — exactly
-    *    the read-back's null-min behavior;
-    *  - row counts come from block metadata (always exact).
-    *
-    * FooterStatsSpec pins value-identity against the read-back. */
+    * staging dir, derived from the parquet FOOTERS alone: one
+    * [[FooterStats.walk]] per subdir, under its exact-parity contract
+    * with [[groupedStatsWithCount]] — ANY subdir's bail-out returns None
+    * and the caller falls back to the read-back wholesale. A (theoretical)
+    * row-less subdir has no group in the read-back's map either, so it
+    * gets no key here. FooterStatsSpec pins value-identity against the
+    * read-back. */
   private def footerGroupedStats(spark: SparkSession, staging: String,
-      subdirs: Seq[String], wantStats: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
+      subdirs: Seq[String], typed: Seq[(String, Char)])
       : Option[Map[String, (Long, Map[String, ColStats])]] = {
-    import org.apache.spark.sql.types._
-    val typed = wantStats.flatMap { c =>
-      schema.find(_.name == c).flatMap(f => f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => Some(c -> 'L')
-        case FloatType | DoubleType                        => Some(c -> 'D')
-        case StringType                                    => Some(c -> 'S')
-        case _                                             => None
-      })
-    }
-    if (typed.exists(_._2 == 'D')) return None // see contract above
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = fs(spark, staging)
-    // bail-out control flow: ANY parity doubt anywhere in the walk
-    // abandons the footer path wholesale — the caller's read-back is
-    // always value-correct, so partial footer results are never mixed in
-    case class FooterBail() extends Exception
-    def bail(): Nothing = throw FooterBail()
-    // unsigned lexicographic byte compare — UTF8String's ordering
-    def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
-    try {
-      val out = subdirs.map { sd =>
-        val files = f.listStatus(new Path(s"$staging/$sd"))
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        var rows = 0L
-        val accL = scala.collection.mutable.Map.empty[String, (Long, Long)]
-        val accS =
-          scala.collection.mutable.Map.empty[String, (Array[Byte], Array[Byte])]
-        files.foreach { st =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try {
-            val footer = rd.getFooter
-            import scala.jdk.CollectionConverters._
-            footer.getBlocks.asScala.foreach { blk =>
-              rows += blk.getRowCount
-              typed.foreach { case (c, tag) =>
-                val chunk = blk.getColumns.asScala
-                  .find(_.getPath.toDotString == c)
-                  .getOrElse(bail()) // column missing from footer
-                val stats = chunk.getStatistics
-                if (stats == null || !stats.isNumNullsSet) bail()
-                val nonNull = chunk.getValueCount - stats.getNumNulls
-                if (nonNull > 0L) {
-                  if (!stats.hasNonNullValue) bail() // dropped stats
-                  tag match {
-                    case 'L' =>
-                      def asL(v: Any): Long = v match {
-                        case l: java.lang.Long    => l.longValue
-                        case i: java.lang.Integer => i.longValue
-                        case _                    => bail()
-                      }
-                      val lo = asL(stats.genericGetMin)
-                      val hi = asL(stats.genericGetMax)
-                      val cur = accL.get(c)
-                      accL(c) = cur.fold((lo, hi)) { case (a, b) =>
-                        (math.min(a, lo), math.max(b, hi)) }
-                    case _ =>
-                      val (mn, mx) =
-                        (stats.genericGetMin, stats.genericGetMax) match {
-                          case (a: org.apache.parquet.io.api.Binary,
-                              b: org.apache.parquet.io.api.Binary) =>
-                            (a.getBytes, b.getBytes)
-                          case _ => bail()
-                        }
-                      // a bound this long may be a TRUNCATED footer stat
-                      // (valid for pruning, not value-exact) — bail to
-                      // the read-back rather than risk inexact bounds;
-                      // real stats strings are short
-                      if (mn.length > 1024 || mx.length > 1024) bail()
-                      val cur = accS.get(c)
-                      accS(c) = cur.fold((mn, mx)) { case (a, b) =>
-                        (if (cmpBytes(mn, a) < 0) mn else a,
-                          if (cmpBytes(mx, b) > 0) mx else b) }
-                  }
-                }
-              }
-            }
-          } finally rd.close()
-        }
-        val stats = typed.flatMap { case (c, tag) =>
-          if (tag == 'L')
-            accL.get(c).map { case (lo, hi) =>
-              c -> ColStats('L', lo.toString, hi.toString) }
-          else
-            accS.get(c).map { case (lo, hi) =>
-              c -> ColStats('S',
-                new String(lo, StandardCharsets.UTF_8),
-                new String(hi, StandardCharsets.UTF_8)) }
-        }.toMap
-        sd -> (rows -> stats)
-      }.toMap
-      // a (theoretical) row-less subdir has no group in the read-back's
-      // map either — keep the absent-key behavior identical
-      Some(out.filter { case (_, (n, _)) => n > 0L })
-    } catch {
-      case _: FooterBail        => None
-      case _: java.io.IOException => None
+    val empty = Map.empty[String, (Long, Map[String, ColStats])]
+    subdirs.foldLeft(Option(empty)) { (acc, sd) =>
+      acc.flatMap(m =>
+        FooterStats.walk(conf, new Path(staging, sd), typed).map(w =>
+          if (w._1 > 0L) m + (sd -> w) else m))
     }
   }
 
@@ -2344,34 +2184,23 @@ object ManifestSink {
     commitRewriteLines(spark, dir, prev, entries, Map.empty)
   }
 
-  /** [[batchStats]] + exact row count per group, keyed by the STRING
-    * form of `groupKey` — ONE aggregate over the frame, ≤ #groups
+  /** Per-column min/max (typed by [[FooterStats.statsTag]]; all-null
+    * columns get no stats) + exact row count per group, keyed by the
+    * STRING form of `groupKey` — ONE aggregate over the frame, ≤ #groups
     * driver rows, whatever the key's type (z buckets, Hive partition
     * subdir names, …). */
   private def groupedStatsWithCount(df: DataFrame,
       groupKey: org.apache.spark.sql.Column, statsCols: Seq[String])
       : Map[String, (Long, Map[String, ColStats])] = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    import org.apache.spark.sql.types._
-    val typed = statsCols.flatMap { c =>
-      df.schema.find(_.name == c).flatMap(f => f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => Some(c -> 'L')
-        case FloatType | DoubleType                        => Some(c -> 'D')
-        case StringType                                    => Some(c -> 'S')
-        case _                                             => None
-      })
-    }
+    val typed = FooterStats.tagged(df.schema, statsCols)
     val aggs = count(lit(1)).as("__n") +: typed.flatMap { case (c, _) =>
       Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")) }
     df.groupBy(groupKey.cast("string").as("__g"))
       .agg(aggs.head, aggs.drop(1): _*)
       .collect().map { row =>
-        val stats = typed.flatMap { case (c, tag) =>
-          val mn = row.getAs[Any](s"__mn_$c")
-          val mx = row.getAs[Any](s"__mx_$c")
-          if (mn == null || mx == null) None
-          else Some(c -> ColStats(tag, boundStr(mn), boundStr(mx)))
-        }.toMap
+        val stats = typed.flatMap { case (c, tag) => minMaxStat(c, tag,
+          row.getAs[Any](s"__mn_$c"), row.getAs[Any](s"__mx_$c")) }.toMap
         row.getAs[String]("__g") -> (row.getAs[Long]("__n") -> stats)
       }.toMap
   }
@@ -3036,17 +2865,13 @@ object ManifestSink {
     require(keys.forall(!_.contains(",")),
       "key column names must not contain ','")
     val spark = updates.sparkSession
-    import org.apache.spark.sql.functions.{col, count, lit, max}
     // Data batch first, row count and stats riding its write pass; every
     // check — per-key uniqueness, emptiness — and the tombstone key file
     // run off the WRITTEN files, so the updates pipeline is evaluated
     // exactly once (r17, guide §1.2: previously the uniqueness probe,
     // the emptiness probe, the keys write, and the data write each ran
-    // the full updates plan). The uniqueness probe is a single agg-max
-    // action, not a filter+isEmpty (an empty filtered take escalates
-    // through up to 4 partition-scan jobs under AQE). A violated
-    // contract or an empty batch deletes the uncommitted dir — no
-    // manifest ever references it.
+    // the full updates plan). A violated contract or an empty batch
+    // deletes the uncommitted dir — no manifest ever references it.
     val prev = version(spark, dir)
     val dBatch = java.util.UUID.randomUUID().toString
     val dDir = s"$dir/data/$dBatch"
@@ -3069,45 +2894,47 @@ object ManifestSink {
     if (prev < 0) {
       // fresh table: no tombstone needed, so the uniqueness probe is its
       // own (single agg-max) action over the written files
-      val dupMax = Option(staged.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n")).agg(max(col("__n"))).head().get(0))
-        .fold(0L)(_.asInstanceOf[Long])
-      if (dupMax > 1L) { abort(); dupFail() }
+      if (keyDupMax(staged, keys) > 1L) { abort(); dupFail() }
       return commitAppendLines(spark, dir, Seq(dataLine), Map.empty)
     }
-    // the uniqueness probe RIDES the tombstone-key write (r18, guide
-    // §1.2): the key file is written from the grouped (key, count) frame
-    // — the same keys-only shuffle the old separate probe paid — with
-    // max(count) observed on the write job, so probe + key write cost
-    // ONE action instead of two. Once uniqueness holds, the grouped
-    // projection IS the key set (distinct == all rows), byte-equivalent
-    // to the previous per-row key file.
     val kBatch = java.util.UUID.randomUUID().toString
     val kDir = s"$dir/data/$kBatch"
+    if (writeTombKeys(staged, keys, kDir) > 1L) {
+      abort(also = Some(kDir)); dupFail()
+    }
+    val tombLine = Entry(s"data/$kBatch",
+      Map(TombKey -> ColStats('S', keys.mkString(","),
+        dRows.toString))).line
+    commitAppendLines(spark, dir, Seq(tombLine, dataLine), Map.empty)
+  }
+
+  /** Write the distinct `keys` of `staged` to `kDir` — a merge-on-read
+    * tombstone key file — and return the largest per-key row count. The
+    * uniqueness probe RIDES the key write (r18, guide §1.2): the file is
+    * written from the grouped (key, count) frame — the same keys-only
+    * shuffle a separate probe would pay — with max(count) observed on
+    * the write job, so probe + key write cost ONE action. Once
+    * uniqueness holds, the grouped projection IS the key set. Falls
+    * back to [[keyDupMax]] over `staged`. */
+  private[graft] def writeTombKeys(staged: DataFrame, keys: Seq[String],
+      kDir: String): Long = {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
     val obs = org.apache.spark.sql.Observation()
     staged.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
       .observe(obs, max(col("__n")).as("__dupmax"))
       .select(keys.map(col): _*)
       .write.parquet(kDir)
-    val dupMax = {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      try Option(scala.concurrent.Await.result(
-          scala.concurrent.Future(obs.get),
-          scala.concurrent.duration.Duration(30, "s"))("__dupmax"))
-        .fold(0L)(_.asInstanceOf[Long])
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          // listener-bus stall: fall back to probing the written batch
-          Option(staged.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__n")).agg(max(col("__n")))
-            .head().get(0)).fold(0L)(_.asInstanceOf[Long])
-      }
-    }
-    if (dupMax > 1L) { abort(also = Some(kDir)); dupFail() }
-    val tombLine = Entry(s"data/$kBatch",
-      Map(TombKey -> ColStats('S', keys.mkString(","),
-        dRows.toString))).line
-    commitAppendLines(spark, dir, Seq(tombLine, dataLine), Map.empty)
+    observedLong(obs)(keyDupMax(staged, keys))
+  }
+
+  /** Largest row count sharing one `keys` value in `df` (0 when empty;
+    * > 1 iff the keys are not unique) — a single agg-max action, not a
+    * filter+isEmpty (an empty filtered take escalates through up to 4
+    * partition-scan jobs under AQE). */
+  private[graft] def keyDupMax(df: DataFrame, keys: Seq[String]): Long = {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    longOr0(df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n")).agg(max(col("__n"))).head().get(0))
   }
 
   /** Keyed MERGE (upsert): every row of `updates` replaces the committed
@@ -3402,33 +3229,6 @@ object ManifestSink {
     (to.filterNot(from), (from -- to).toSeq.sorted)
   }
 
-  /** Per-entry metadata report of the current snapshot — the DESCRIBE
-    * DETAIL / files-table introspection surface every table format
-    * exposes: one row per DATA entry (tombstones excluded), in manifest
-    * order, with the entry's recorded row count and each requested
-    * stats column's [min, max] — answered from the MANIFEST ALONE (one
-    * small-file read; zero data reads at any table size). Stats values
-    * come back in their string encoding; callers cast by the column's
-    * known type. Entries predating stats report nulls — introspection
-    * never fails a table, it describes it. */
-  /** Commit history derived STRUCTURALLY from the manifest chain — the
-    * DESCRIBE HISTORY analog, zero data reads at any table size. Each
-    * version is classified by a multiset diff of its entry lines
-    * against its parent's (batch paths are unique UUIDs, so a line
-    * identifies its batch): `create` (v0), `append` (entries added,
-    * none removed), `delete` (tombstone-only addition — the
-    * merge-on-read shapes), `rewrite` (entries replaced: merge,
-    * compact, copy-on-write delete, restore that re-lists), `shrink`
-    * (entries dropped, none added: a restore to a shorter snapshot),
-    * `marker` (header-only). Deriving the kind from STRUCTURE instead
-    * of a recorded operation name means history works on every
-    * manifest ever committed, needs no commit-path changes, and cannot
-    * be lied to. `rows_added`/`rows_removed` are exact (from the
-    * per-entry row counts every commit records; tombstone entries
-    * excluded — they hold keys, not data); null only if an entry
-    * predates row counting. `ts_millis` is the commit's `#ts` header.
-    * Cost: one small-file read per version — history-length-bounded,
-    * metadata-only. */
   /** Commit-size anomaly report over [[history]]: a version is flagged
     * when `rows_added · factor <` the largest `rows_added` of any
     * EARLIER version — the alert a streaming ingestion wires to its
@@ -3455,6 +3255,28 @@ object ManifestSink {
           lit(false)))
   }
 
+  /** Commit history derived STRUCTURALLY from the manifest chain — the
+    * DESCRIBE HISTORY analog, zero data reads at any table size. Each
+    * version is classified by a multiset diff of its entry lines
+    * against its parent's (batch paths are unique UUIDs, so a line
+    * identifies its batch): `create` (v0), `append` (entries added,
+    * none removed), `delete` (tombstone-only addition — the
+    * merge-on-read shapes), `rewrite` (entries replaced: merge,
+    * compact, copy-on-write delete, restore that re-lists), `shrink`
+    * (entries dropped, none added: a restore to a shorter snapshot),
+    * `marker` (header-only). Deriving the kind from STRUCTURE instead
+    * of a recorded operation name means history works on every
+    * manifest ever committed, needs no commit-path changes, and cannot
+    * be lied to. `rows_added`/`rows_removed` are exact (from the
+    * per-entry row counts every commit records; tombstone entries
+    * excluded — they hold keys, not data); null only if an entry
+    * predates row counting. `ts_millis` is the commit's `#ts` header.
+    * Cost: one small-file read per version — history-length-bounded,
+    * metadata-only. After a [[vacuum]], history starts at the vacuum
+    * floor: reclaimed versions have no manifest left to describe. A
+    * first retained version that is a FULL manifest (a checkpoint or a
+    * rewrite) has no readable parent, so it reports every entry as
+    * added. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cur = version(spark, dir)
@@ -3465,8 +3287,13 @@ object ManifestSink {
     // difference between seconds and minutes on a deep streaming table
     // (measured in MetaSweep's V axis). Any other base (never written
     // today) falls back to full resolution.
+    // versions below the vacuum floor are reclaimed: the walk starts
+    // at the floor (a torn one reads as +inf: just the head), whose
+    // snapshot it resolves in full — its delta chain may reach below
+    // the floor, and vacuum keeps that chain
+    val first = math.max(0L, math.min(readFloor(fs(spark, dir), dir), cur))
     var prevResolved = Vector.empty[String]
-    val rows = (0L to cur).map { v =>
+    val rows = (first to cur).map { v =>
       val prevL = prevResolved
       val lines = manifestLines(spark, dir, v)
       def counts(xs: Seq[String]): Map[String, Int] =
@@ -3477,7 +3304,10 @@ object ManifestSink {
       val (curL, added, removed) = deltaBase(lines) match {
         case Some(b) if b == v - 1 =>
           val own = lines.filterNot(_.startsWith("#"))
-          (prevL ++ own, own, Seq.empty[String])
+          val cl =
+            if (v == first) manifestEntries(spark, dir, v).toVector
+            else prevL ++ own
+          (cl, own, Seq.empty[String])
         case other =>
           val cl: Vector[String] = other match {
             case Some(_) => manifestEntries(spark, dir, v).toVector
@@ -3518,6 +3348,15 @@ object ManifestSink {
       "n_tombstones_added", "rows_added", "rows_removed")
   }
 
+  /** Per-entry metadata report of the current snapshot — the DESCRIBE
+    * DETAIL / files-table introspection surface every table format
+    * exposes: one row per DATA entry (tombstones excluded), in manifest
+    * order, with the entry's recorded row count and each requested
+    * stats column's [min, max] — answered from the MANIFEST ALONE (one
+    * small-file read; zero data reads at any table size). Stats values
+    * come back in their string encoding; callers cast by the column's
+    * known type. Entries predating stats report nulls — introspection
+    * never fails a table, it describes it. */
   def filesReport(spark: SparkSession, dir: String,
       statCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.Row
@@ -3787,8 +3626,7 @@ object ManifestSink {
   /** Garbage-collect: keep the newest `keepVersions` manifests (the
     * time-travel window); delete older manifest files and any data
     * directory no retained manifest references (replaced compactions,
-    * aborted writes). Returns deleted data dirs. */
-  /** Garbage-collect unreferenced data and old manifests.
+    * aborted writes). Returns deleted data dirs.
     *
     * `minAgeMs` guards CONCURRENT APPENDERS: an appender writes its
     * data directory BEFORE its manifest entry exists, so a vacuum
@@ -3797,7 +3635,14 @@ object ManifestSink {
     * set `minAgeMs` above the longest plausible data-write duration
     * (the log-structured-format tombstone-retention discipline); the
     * 0 default is for the single-stream retention pipelines, where the
-    * only writer is the one calling vacuum. */
+    * only writer is the one calling vacuum.
+    *
+    * Before reclaiming anything, vacuum persists the vacuum floor and
+    * refreshes the `_latest` hint to the current version, then reads
+    * the hint back. A readback below the current version throws
+    * `java.io.IOException` (an I/O failure, not a caller error) and
+    * nothing is reclaimed. A failed floor write throws
+    * `IllegalArgumentException`, also before reclaiming. */
   def vacuum(spark: SparkSession, dir: String,
       keepVersions: Int = 1, minAgeMs: Long = 0L,
       protectVersions: Seq[Long] = Nil): Seq[String] = {

@@ -2,8 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, count, lag, lead, lit, max,
-  struct, sum, when}
+import org.apache.spark.sql.functions.{col, lag, lead, lit, max, struct,
+  sum, when}
 
 /** SCD Type-2 dimension maintenance over a [[ManifestSink]] table — the
   * versioned-row shape (Kimball's slowly changing dimension, type 2)
@@ -142,22 +142,7 @@ object Scd2 {
       // emptiness to the sink's write-then-abort. The require still
       // throws BEFORE anything is written or committed.
       val n = chain.count()
-      val dup =
-        try {
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Option(scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get),
-            scala.concurrent.duration.Duration(30, "s"))("__dup"))
-            .fold(0L)(_.asInstanceOf[Long])
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            // listener-bus stall: recompute with the pre-r18 probe
-            if (Option(u.groupBy(col(key), col(seqCol))
-                .agg(count(lit(1)).as("__n"))
-                .agg(org.apache.spark.sql.functions.max(col("__n")))
-                .head().get(0)).fold(0L)(_.asInstanceOf[Long]) > 1L) 1L
-            else 0L
-        }
+      val dup = graft.Observed.observedLong(obs)(dupFlag(u, key, seqCol))
       require(dup == 0L,
         s"SCD2 updates must be unique per ($key, $seqCol)")
       // an empty chain — all stale / all collapsed, an epoch replay
@@ -170,6 +155,13 @@ object Scd2 {
       else ManifestSink.mergeOnRead(chain, dir, Seq(key, FromCol))
     } finally chain.unpersist(false)
   }
+
+  /** [[applyUpdates]]'s uniqueness flag recomputed without the
+    * observation: 1 iff some (`key`, `seqCol`) pair occurs more than
+    * once in `u`, else 0. */
+  private[graft] def dupFlag(u: DataFrame, key: String,
+      seqCol: String): Long =
+    if (ManifestSink.keyDupMax(u, Seq(key, seqCol)) > 1L) 1L else 0L
 
   /** The dimension AS OF a version stamp: the row whose
     * [valid_from, valid_to) interval contains `seq` — at most one per

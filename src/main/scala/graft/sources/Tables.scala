@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+
+import graft.sinks.FooterStats
 
 /** Loaders for the driver-provided parquet tables (repo:TESTDATA.md).
   *
@@ -45,94 +48,19 @@ object Tables {
     * probe is a full scan of the table's key column, while the footer
     * path is a driver-side metadata read with ZERO Spark jobs.
     *
-    * EXACT-PARITY CONTRACT with `df.agg(max(col))` — the footer path is
-    * taken only when every condition below holds, otherwise the scan
-    * runs (FooterMaxSpec pins value-identity and each bail-out):
-    *  - the column is physically INT32/INT64 with signed semantics (no
-    *    logical annotation, or a signed IntLogicalTypeAnnotation):
-    *    parquet's integer stats comparator is then the same signed order
-    *    Spark's max uses; float/double/string/unsigned never ride;
-    *  - every row-group chunk carries statistics with a set null count,
-    *    and every chunk with non-null values has retained min/max
-    *    (parquet-mr DROPS rather than truncates oversized stats, which
-    *    surfaces as hasNonNullValue=false and bails);
-    *  - at least one non-null value exists somewhere (an all-null or
-    *    empty table falls back — the scan's null→NPE behavior is the
-    *    pinned contract, not a footer guess).
-    */
+    * The footer path is one [[FooterStats.walk]] of the column as an
+    * 'L' (signed INT32/INT64) stats column, under its exact-parity
+    * contract with `df.agg(max(col))`. Any bail-out runs the scan, and
+    * so does an all-null or empty table, where the scan's null→NPE
+    * behavior is the pinned contract, not a footer guess (FooterMaxSpec
+    * pins value-identity and each bail-out). */
   def maxLong(spark: SparkSession, dir: String, name: String,
       column: String): Long =
-    footerMaxLong(spark, s"$dir/$name.parquet", column).getOrElse(
-      apply(spark, dir, name).agg(max(col(column))).head().getLong(0))
-
-  private def footerMaxLong(spark: SparkSession, path: String,
-      column: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    // ANY parity doubt abandons the footer path wholesale; the caller's
-    // scan is always value-correct (same pattern as ManifestSink's
-    // footerGroupedStats)
-    case class FooterBail() extends Exception
-    def bail(): Nothing = throw FooterBail()
-    try {
-      val p = new Path(path)
-      val f = p.getFileSystem(conf)
-      val st = f.getFileStatus(p)
-      val files =
-        if (st.isFile) Seq(st)
-        else f.listStatus(p).toSeq.filter(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet"))
-      if (files.isEmpty) bail()
-      var acc: Option[Long] = None
-      files.foreach { fst =>
-        val rd = ParquetFileReader.open(
-          HadoopInputFile.fromPath(fst.getPath, conf))
-        try {
-          val footer = rd.getFooter
-          val schema = footer.getFileMetaData.getSchema
-          if (!schema.containsField(column)) bail()
-          val t = schema.getType(schema.getFieldIndex(column))
-          if (!t.isPrimitive) bail()
-          val pt = t.asPrimitiveType()
-          val ptn = pt.getPrimitiveTypeName
-          if (ptn != PrimitiveTypeName.INT64 &&
-            ptn != PrimitiveTypeName.INT32) bail()
-          pt.getLogicalTypeAnnotation match {
-            case null => ()
-            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                if i.isSigned => ()
-            case _ => bail() // timestamps, unsigned ints, ...
-          }
-          footer.getBlocks.asScala.foreach { blk =>
-            val chunk = blk.getColumns.asScala
-              .find(_.getPath.toDotString == column)
-              .getOrElse(bail())
-            val stats = chunk.getStatistics
-            if (stats == null || !stats.isNumNullsSet) bail()
-            val nonNull = chunk.getValueCount - stats.getNumNulls
-            if (nonNull > 0L) {
-              if (!stats.hasNonNullValue) bail()
-              val hi = stats.genericGetMax match {
-                case l: java.lang.Long    => l.longValue
-                case i: java.lang.Integer => i.longValue
-                case _                    => bail()
-              }
-              acc = Some(acc.fold(hi)(math.max(_, hi)))
-            }
-          }
-        } finally rd.close()
-      }
-      acc // None (all-null/empty) falls back to the scan's behavior
-    } catch {
-      case _: FooterBail          => None
-      case _: java.io.IOException => None
-    }
-  }
+    FooterStats.walk(spark.sparkContext.hadoopConfiguration,
+        new Path(s"$dir/$name.parquet"), Seq(column -> 'L'))
+      .flatMap(_._2.get(column)).map(_.max.toLong)
+      .getOrElse(
+        apply(spark, dir, name).agg(max(col(column))).head().getLong(0))
 
   /** Run a SQL query over temp views WITHOUT racing concurrent
     * invocations on the same session: each frame registers under a

@@ -61,4 +61,18 @@ class SinkOpsSpec extends SparkSpec {
     assert(kept.size === 2, s"kept ${kept.size} of ${all.size}")
     assert(skipped.size === all.size - 2)
   }
+
+  test("q182/q184 prove the view served them from scan locations, even " +
+      "when plan strings are cut to 10 characters") {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "10")
+    try {
+      for (q <- Seq("q182_join_view_rewrite", "q184_managed_agg_view"))
+        assert(SinkOps.queries(q)(spark, sf).collect().nonEmpty, q)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

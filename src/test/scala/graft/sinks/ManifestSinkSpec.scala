@@ -1822,4 +1822,42 @@ class ManifestSinkSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ===
       Seq((1L, "a"), (2L, "B"), (3L, "c")))
   }
+
+  test("history after vacuum starts at the vacuum floor with exact " +
+      "row accounting") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("msinkhv").toString + "/t"
+    ManifestSink.append(Seq(1L, 2L).toDF("k"), dir) // v0
+    ManifestSink.append(Seq(3L).toDF("k"), dir) // v1
+    ManifestSink.append(Seq(4L, 5L, 6L).toDF("k"), dir) // v2
+    ManifestSink.vacuum(spark, dir, keepVersions = 1)
+    val h = ManifestSink.history(spark, dir).orderBy($"version").collect()
+    assert(h.map(_.getAs[Long]("version")).toSeq === Seq(2L))
+    assert(h(0).getAs[String]("kind") === "append")
+    assert(h(0).getAs[Long]("n_added") === 1L)
+    assert(h(0).getAs[Long]("rows_added") === 3L)
+  }
+
+  test("history after vacuum has reclaimed the floor's parent manifest") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("msinkhv2").toString + "/t"
+    val saved = ManifestSink.manifestCheckpointEvery
+    ManifestSink.manifestCheckpointEvery = 2 // v0, v2 full; v1, v3 deltas
+    try {
+      ManifestSink.append(Seq(1L, 2L).toDF("k"), dir) // v0
+      ManifestSink.append(Seq(3L).toDF("k"), dir) // v1
+      ManifestSink.append(Seq(4L, 5L, 6L).toDF("k"), dir) // v2
+      ManifestSink.append(Seq(7L).toDF("k"), dir) // v3
+    } finally ManifestSink.manifestCheckpointEvery = saved
+    ManifestSink.vacuum(spark, dir, keepVersions = 2)
+    val v0 = java.nio.file.Paths.get(s"$dir/_manifests/0.manifest")
+    assert(!Files.exists(v0), "vacuum must reclaim v0's manifest")
+    val h = ManifestSink.history(spark, dir).orderBy($"version").collect()
+    assert(h.map(_.getAs[Long]("version")).toSeq === Seq(2L, 3L))
+    // v2 is a full snapshot whose parent is gone: every entry is added
+    assert(h(0).getAs[Long]("n_added") === 3L)
+    assert(h(0).getAs[Long]("rows_added") === 6L)
+    assert(h(1).getAs[String]("kind") === "append")
+    assert(h(1).getAs[Long]("rows_added") === 1L)
+  }
 }
