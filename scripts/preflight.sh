@@ -14,6 +14,12 @@ cd "$(dirname "$0")/.."
 sbt -batch "Test/compile"
 echo "preflight OK: main + test sources compile"
 
+# Commit-protocol specs (manifest publish, head hint, vacuum floor,
+# vacuum): every table the engine writes goes through them, so a
+# regression there fails here by name, before any data smoke.
+sbt -batch "testOnly graft.sinks.ManifestSinkSpec graft.sinks.DeltaManifestSpec"
+echo "preflight OK: commit-protocol specs"
+
 # Footer-schema drift guard (round 10): the r8 drift class was caught by
 # the smoke only because it CRASHED; a footer change that silently
 # reshapes semantics would sail through. Diff every table's parquet

@@ -16,7 +16,9 @@ import graft.Observed.{longOr0, observed, observedLong}
   *   dir/_manifests/<version>.manifest      — newline list of data dirs,
   *     each optionally `\t`-suffixed with per-column min/max stats
   *     (the [[readWhere]] file-skipping metadata; see [[Entry]])
-  *   dir/_latest                            — current version number
+  *   dir/_latest.d/<version>                — head hint: an empty
+  *     file whose NAME is the version (largest name wins)
+  *   dir/_vacuum_floor.d/<version>          — vacuum floor, same form
   * }}}
   *
   * A commit writes new data files, then publishes the next manifest via
@@ -25,15 +27,16 @@ import graft.Observed.{longOr0, observed, observedLong}
   * the target name never pre-exists, no delete precedes it: there is no
   * instant at which the sink has fewer committed versions than before.
   * The current version is the LARGEST numbered manifest present;
-  * `_latest` is only a one-read fast-path hint, refreshed after commit
-  * and cross-checked against the listing (a stale or missing hint —
-  * e.g. a crash between the manifest rename and the hint write — is
-  * repaired by the listing, never trusted over it). Readers resolve
-  * version → manifest → file list, so they always see a complete
-  * snapshot: never a half-written batch, never a half-compacted swap
-  * (the failure mode directory-rename sinks have on object stores where
-  * rename is copy+delete). Unreferenced data from `replace` commits
-  * stays on disk until [[vacuum]] — the same
+  * `_latest.d` is only a one-read fast-path hint, refreshed after
+  * commit by creating a name (never by replacing a file; see
+  * [[markerNames]]) and cross-checked against the listing (a stale or
+  * missing hint — e.g. a crash between the manifest rename and the
+  * hint write — is repaired by the listing, never trusted over it).
+  * Readers resolve version → manifest → file list, so they always see
+  * a complete snapshot: never a half-written batch, never a
+  * half-compacted swap (the failure mode directory-rename sinks have
+  * on object stores where rename is copy+delete). Unreferenced data
+  * from `replace` commits stays on disk until [[vacuum]] — the same
   * write-new/flip-pointer/collect-garbage protocol as log-structured
   * table formats, reduced to the minimum the engine needs.
   *
@@ -296,52 +299,98 @@ object ManifestSink {
     require(tryPublishNew(f, p, content),
       s"failed to commit $p: a concurrent writer published this version")
 
-  /** Best-effort overwrite of the `_latest` hint — NOT load-bearing: a
-    * crash or lost race here leaves at worst a STALE hint, which
-    * [[version]] repairs from the manifest listing. The overwrite is a
-    * single ATOMIC rename onto the hint name — POSIX `rename(2)` via
-    * NIO `ATOMIC_MOVE` on the `file` scheme, `FileContext` OVERWRITE
-    * rename elsewhere — so once the first commit has written a hint, no
-    * reader EVER observes the file missing (the previous delete-then-
-    * rename had a no-`_latest` window that a concurrent version() probe
-    * or vacuum readback could land in; r16 advice asked for the race to
-    * be removed at the root rather than retried through). The temp name
-    * is writer-unique so concurrent hint refreshes never interleave
-    * through a shared temp; when two refreshes race, each rename is
-    * all-or-nothing and the last one wins whole. */
-  private[sinks] def writeHint(f: FileSystem, p: Path,
-      content: String): Unit = {
-    val scheme = Option(p.toUri.getScheme).getOrElse(f.getScheme)
-    if (scheme == "file") {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val dst = Paths.get(p.toUri.getPath)
-      Files.createDirectories(dst.getParent)
-      val tmp = dst.resolveSibling(
-        p.getName + "." + java.util.UUID.randomUUID() + ".tmp")
-      Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-      try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      catch { // best-effort: drop the temp, keep whatever hint is there
-        case _: java.io.IOException =>
-          try { Files.deleteIfExists(tmp); () }
-          catch { case _: java.io.IOException => () }
-      }
-    } else {
-      val tmp = new Path(p.getParent,
-        p.getName + "." + java.util.UUID.randomUUID() + ".tmp")
-      val out = f.create(tmp, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          p.toUri, f.getConf)
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: java.io.IOException =>
-          try { f.delete(tmp, false); () }
-          catch { case _: java.io.IOException => () }
-      }
-    }
+  // ------------------------------------------------------------ markers
+  /** A MARKER holds one monotonic version as the NAME of an empty file
+    * under `dir/<name>.d/`. There are two: the head hint
+    * (`_latest.d/<v>`, see [[writeHint]]) and the vacuum floor
+    * (`_vacuum_floor.d/<v>`, see [[writeFloorLoud]]).
+    *
+    * [[writeMarker]] CREATES the new name, then prunes lower names and
+    * the legacy single file `dir/<name>` of earlier builds,
+    * best-effort. The value is the name, so no write can tear it; the
+    * new name exists before any old one is deleted, so once a marker
+    * exists it is never missing; and a racing lower refresh prunes only
+    * below itself, so the readable max never decreases. A crash
+    * anywhere leaves at worst extra lower names. [[readMarker]] takes
+    * the largest numeric name, max'd with the legacy file (a torn one
+    * reads as +inf: every consumer then falls back to the listing).
+    *
+    * Creating a fresh name is a cheap metadata operation, while a
+    * rename that replaces a non-empty file costs 47-60 ms on an ext4
+    * volume of a 4-core VM; so no marker write replaces a file. On the
+    * `file` scheme all three steps go through NIO: no `.crc` sidecar,
+    * no forked `chmod`, and the listing is one directory read of names —
+    * Hadoop's local listing stats each name and drops the ones deleted
+    * meanwhile, so it could read a directory mid-refresh as empty.
+    *
+    * This returns the numeric names under marker directory `md` (none
+    * if it is missing or not a directory; other names are ignored). */
+  private def markerNames(f: FileSystem, md: Path): Seq[Long] = {
+    val names =
+      if (isLocal(f, md))
+        Option(new java.io.File(md.toUri.getPath).list()).toSeq.flatten
+      else
+        try f.listStatus(md).toSeq.map(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Nil }
+    names.flatMap(_.toLongOption)
   }
+
+  private def isLocal(f: FileSystem, p: Path): Boolean =
+    Option(p.toUri.getScheme).getOrElse(f.getScheme) == "file"
+
+  /** The legacy single-file marker `dir/<name>`: -1 if absent, +inf if
+    * torn (its value is unknowable). */
+  private def readLegacy(f: FileSystem, dir: String, name: String): Long = {
+    val p = new Path(dir, name)
+    if (!f.exists(p)) -1L
+    else scala.util.Try(readSmall(f, p).trim.toLong).getOrElse(Long.MaxValue)
+  }
+
+  private def readMarker(f: FileSystem, dir: String, name: String): Long =
+    markerNames(f, new Path(dir, name + ".d"))
+      .foldLeft(readLegacy(f, dir, name))(math.max)
+
+  /** Refresh marker `name` to `v`. Returns whether the name `v` exists
+    * afterwards; only then is anything pruned. */
+  private def writeMarker(f: FileSystem, dir: String, name: String,
+      v: Long): Boolean = {
+    import java.nio.file.Files
+    val md = new Path(dir, name + ".d")
+    val p = new Path(md, v.toString)
+    val local = isLocal(f, p)
+    val nio = java.nio.file.Paths.get(p.toUri.getPath)
+    // an IOException means the name is already there or the create
+    // failed: the existence check below decides which
+    try {
+      if (!local) f.create(p, false).close()
+      else { Files.createDirectories(nio.getParent); Files.createFile(nio) }
+    } catch { case _: java.io.IOException => () }
+    val made = if (local) Files.exists(nio) else f.exists(p)
+    if (made) try {
+      markerNames(f, md).filter(_ < v).foreach { w =>
+        if (local) Files.deleteIfExists(nio.resolveSibling(w.toString))
+        else f.delete(new Path(md, w.toString), false)
+      }
+      val legacy = new Path(dir, name)
+      if (f.exists(legacy)) f.delete(legacy, false)
+    } catch { case _: java.io.IOException => () } // extras are harmless
+    made
+  }
+
+  private val HintName = "_latest"
+
+  /** Refresh the head hint to `v`, best-effort — NOT load-bearing: a
+    * crash or failure here leaves at worst a stale or missing hint,
+    * which [[version]] repairs from the manifest listing. Concurrent
+    * refreshes need no coordination: the hint is the largest name. */
+  private[sinks] def writeHint(f: FileSystem, dir: String, v: Long): Unit = {
+    writeMarker(f, dir, HintName, v); ()
+  }
+
+  /** The head hint, or -1 if there is none (a legacy `_latest` file
+    * from earlier builds is max'd in as a lower bound). */
+  private[sinks] def readHint(f: FileSystem, dir: String): Long =
+    readMarker(f, dir, HintName)
 
   /** The vacuum floor: the lowest version whose manifest a vacuum
     * GUARANTEED to keep (its `keepFrom`), persisted BEFORE any manifest
@@ -352,87 +401,37 @@ object ManifestSink {
     * reclaimed version slot, forking history. Any anchor below the
     * floor falls back to the full listing. Monotonic: a later vacuum
     * with a larger window never lowers it (the gaps the old floor
-    * records don't un-exist).
-    *
-    * PERSISTENCE (r14 advice): floors are create-only files named
-    * `_vacuum_floor.d/<v>` — the VALUE IS THE NAME, so no write
-    * sequence can tear or erase the current floor (the old delete-
-    * then-rename single file could vanish in a crash between the two
-    * steps, and a missing floor reads as "never vacuumed": the one
-    * corruption mode that re-admits the probe below real gaps). A
-    * crash mid-[[writeFloorLoud]] leaves at worst an extra lower file
-    * (max unaffected) or an empty-but-named new file (name still
-    * carries the value) — every failure mode keeps the readable floor
-    * at or above every reclaimed gap. The legacy single
-    * `_vacuum_floor` file is still read (max'd in) for tables written
-    * by earlier builds; a torn legacy file reads as +inf — every probe
-    * falls back to the listing: slow, never wrong. */
-  private val FloorDirName = "_vacuum_floor.d"
-
-  private def readLegacyFloor(f: FileSystem, dir: String): Long = {
-    val p = new Path(dir, "_vacuum_floor")
-    if (!f.exists(p)) -1L
-    else scala.util.Try(readSmall(f, p).trim.toLong).getOrElse(Long.MaxValue)
-  }
-
-  /** Max version named in `_vacuum_floor.d`, or -1 if absent/empty.
-    * The dir holds 1-2 entries after any crash (writeFloorLoud prunes
-    * lower names best-effort), so the listing is O(1). */
-  private def readVersionedFloor(f: FileSystem, dir: String): Long = {
-    val fd = new Path(dir, FloorDirName)
-    if (!f.exists(fd)) -1L
-    else f.listStatus(fd).foldLeft(-1L) { (acc, st) =>
-      st.getPath.getName.toLongOption.fold(acc)(math.max(acc, _))
-    }
-  }
+    * records don't un-exist). Stored as a marker ([[markerNames]]):
+    * a missing floor reads as "never vacuumed", the one corruption
+    * mode that re-admits the probe below real gaps, and no marker
+    * write sequence can produce it. */
+  private val FloorName = "_vacuum_floor"
 
   private def readFloor(f: FileSystem, dir: String): Long =
-    math.max(readLegacyFloor(f, dir), readVersionedFloor(f, dir))
+    readMarker(f, dir, FloorName)
 
   /** The floor value a vacuum should persist: monotonic max of the old
     * floor and this vacuum's keepFrom. A TORN legacy floor file aborts
     * the vacuum — its true value is unknowable and writing a lower one
-    * would re-admit the forward probe below real gaps. (Versioned
-    * floors cannot tear: the value is the filename.) */
+    * would re-admit the forward probe below real gaps. */
   private def floorForWrite(f: FileSystem, dir: String,
       keepFrom: Long): Long = {
-    val legacy = readLegacyFloor(f, dir)
-    if (legacy == Long.MaxValue) throw new IllegalStateException(
-      s"vacuum at $dir: existing _vacuum_floor is unreadable — " +
-        "refusing to proceed (its true value is unknowable, and a " +
-        "lower new floor would unsound version()'s probe). Repair or " +
-        "remove the file first.")
-    math.max(math.max(legacy, readVersionedFloor(f, dir)), keepFrom)
+    if (readLegacy(f, dir, FloorName) == Long.MaxValue)
+      throw new IllegalStateException(
+        s"vacuum at $dir: existing _vacuum_floor is unreadable — " +
+          "refusing to proceed (its true value is unknowable, and a " +
+          "lower new floor would unsound version()'s probe). Repair or " +
+          "remove the file first.")
+    math.max(readFloor(f, dir), keepFrom)
   }
 
-  /** Persist floor `v` crash-safely: CREATE `_vacuum_floor.d/<v>`
-    * first (the floor is now durable — nothing below deletes it), then
-    * best-effort prune lower-numbered floors and the legacy file (both
-    * are dominated by `v`, so losing the prune to a crash only leaves
-    * harmless extras). Aborts BEFORE the caller reclaims anything if
-    * the create cannot be proven. */
-  private def writeFloorLoud(f: FileSystem, dir: String, v: Long): Unit = {
-    val fd = new Path(dir, FloorDirName)
-    val p = new Path(fd, v.toString)
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    require(f.exists(p),
+  /** Persist floor `v`, aborting BEFORE the caller reclaims anything if
+    * the name cannot be created. */
+  private def writeFloorLoud(f: FileSystem, dir: String, v: Long): Unit =
+    require(writeMarker(f, dir, FloorName, v),
       s"vacuum at $dir: failed to persist the vacuum floor $v — " +
         "aborting BEFORE reclaiming anything (the floor is " +
         "load-bearing for version()'s forward probe)")
-    // prune: strictly-lower versioned floors, then the legacy file —
-    // all ≤ v (floorForWrite max'd them in), so the readable max never
-    // drops below v whatever survives a crash here
-    f.listStatus(fd).foreach { st =>
-      if (st.getPath.getName.toLongOption.exists(_ < v))
-        f.delete(st.getPath, false)
-    }
-    val legacy = new Path(dir, "_vacuum_floor")
-    if (f.exists(legacy)) f.delete(legacy, false)
-  }
 
   private val ManifestName = """(\d+)\.manifest""".r
 
@@ -672,7 +671,8 @@ object ManifestSink {
 
   /** Current committed version, or -1 for an empty sink.
     *
-    * Resolution anchors on the `_latest` hint and PROBES FORWARD by
+    * Resolution anchors on the head hint (the largest `_latest.d`
+    * name, see [[readHint]]) and PROBES FORWARD by
     * name to the first missing manifest — version numbers are dense
     * above any committed version (commits serialize through the
     * conditional put; [[vacuum]] reclaims only below its horizon and
@@ -681,9 +681,9 @@ object ManifestSink {
     * never the O(versions) directory listing (MetaSweep measured the
     * listing at ~11 ms per call / 71 ms per commit on a 10 k-version
     * dribble table — the next metadata bottleneck after the delta log).
-    * A missing, torn (unparseable / CRC-mismatched), or vacuumed-past
-    * hint falls back to the full listing, so a crash between manifest
-    * publish and hint refresh never rolls the table back.
+    * A missing or vacuumed-past hint, or one naming a manifest that
+    * does not exist, falls back to the full listing, so a crash between
+    * manifest publish and hint refresh never rolls the table back.
     *
     * The probe's density assumption holds only ABOVE the vacuum floor:
     * below it, protect/chain-kept manifests are islands inside
@@ -699,25 +699,21 @@ object ManifestSink {
     * has pre-floor islands. */
   def version(spark: SparkSession, dir: String): Long = {
     val f = fs(spark, dir)
-    val latest = new Path(dir, "_latest")
-    if (f.exists(latest)) {
-      val hinted = scala.util.Try(readSmall(f, latest).trim.toLong)
-        .getOrElse(-1L)
-      if (hinted >= 0 && hinted >= readFloor(f, dir) &&
-          f.exists(new Path(dir, s"_manifests/$hinted.manifest"))) {
-        var v = hinted
-        while (f.exists(new Path(dir, s"_manifests/${v + 1}.manifest")))
-          v += 1
-        // Concurrent-vacuum guard (r14 advice): a vacuum can raise the
-        // floor and reclaim manifests AFTER the floor check above, so
-        // the walk may have stopped at a freshly created gap below the
-        // NEW floor (a stale island head). Re-read: vacuum persists
-        // the floor before deleting anything, so a head at/after the
-        // re-read floor sits in the provably-dense range (vacuum never
-        // reclaims at/above its keepFrom) and is the true head; below
-        // it, fall back to the listing.
-        if (v >= readFloor(f, dir)) return v
-      }
+    val hinted = readHint(f, dir)
+    if (hinted >= 0 && hinted >= readFloor(f, dir) &&
+        f.exists(new Path(dir, s"_manifests/$hinted.manifest"))) {
+      var v = hinted
+      while (f.exists(new Path(dir, s"_manifests/${v + 1}.manifest")))
+        v += 1
+      // Concurrent-vacuum guard (r14 advice): a vacuum can raise the
+      // floor and reclaim manifests AFTER the floor check above, so
+      // the walk may have stopped at a freshly created gap below the
+      // NEW floor (a stale island head). Re-read: vacuum persists
+      // the floor before deleting anything, so a head at/after the
+      // re-read floor sits in the provably-dense range (vacuum never
+      // reclaims at/above its keepFrom) and is the true head; below
+      // it, fall back to the listing.
+      if (v >= readFloor(f, dir)) return v
     }
     listedVersion(f, dir)
   }
@@ -864,7 +860,7 @@ object ManifestSink {
     // commit point: this rename (new name — nothing is deleted first)
     publishNew(f, new Path(dir, s"_manifests/$next.manifest"),
       lines.mkString("\n"))
-    writeHint(f, new Path(dir, "_latest"), next.toString)
+    writeHint(f, dir, next)
     next
   }
 
@@ -1558,13 +1554,13 @@ object ManifestSink {
             "infrastructure failure, not a commit race")
         // self-heal the hint (the winner may have crashed before its
         // refresh): the retry's [[version]] probe anchors correctly
-        writeHint(f, new Path(dir, "_latest"), listed.toString)
+        writeHint(f, dir, listed)
         attempts += 1
         require(attempts < 1000,
           s"append to $dir starved: lost $attempts consecutive commit races")
       }
     }
-    writeHint(f, new Path(dir, "_latest"), committed.toString)
+    writeHint(f, dir, committed)
     committed
   }
 
@@ -1631,7 +1627,7 @@ object ManifestSink {
             "races")
       }
     }
-    writeHint(f, new Path(dir, "_latest"), committed.toString)
+    writeHint(f, dir, committed)
     committed
   }
 
@@ -1789,7 +1785,7 @@ object ManifestSink {
     val f = fs(spark, dir)
     publishNew(f, new Path(dir, s"_manifests/$next.manifest"),
       all.mkString("\n"))
-    writeHint(f, new Path(dir, "_latest"), next.toString)
+    writeHint(f, dir, next)
     next
   }
 
@@ -2001,7 +1997,7 @@ object ManifestSink {
     val next = cur + 1
     publishNew(f, new Path(dir, s"_manifests/$next.manifest"),
       lines.mkString("\n"))
-    writeHint(f, new Path(dir, "_latest"), next.toString)
+    writeHint(f, dir, next)
     next
   }
 
@@ -2035,7 +2031,7 @@ object ManifestSink {
     val f = fs(spark, dstDir)
     publishNew(f, new Path(dstDir, "_manifests/0.manifest"),
       lines.mkString("\n"))
-    writeHint(f, new Path(dstDir, "_latest"), "0")
+    writeHint(f, dstDir, 0L)
     0L
   }
 
@@ -3020,7 +3016,7 @@ object ManifestSink {
     val f = fs(spark, dir)
     publishNew(f, new Path(dir, s"_manifests/$next.manifest"),
       lines.mkString("\n"))
-    writeHint(f, new Path(dir, "_latest"), next.toString)
+    writeHint(f, dir, next)
     next
   }
 
@@ -3638,11 +3634,14 @@ object ManifestSink {
     * only writer is the one calling vacuum.
     *
     * Before reclaiming anything, vacuum persists the vacuum floor and
-    * refreshes the `_latest` hint to the current version, then reads
-    * the hint back. A readback below the current version throws
+    * refreshes the head hint (`_latest.d/<current>`), then reads the
+    * hint back. A readback below the current version throws
     * `java.io.IOException` (an I/O failure, not a caller error) and
     * nothing is reclaimed. A failed floor write throws
-    * `IllegalArgumentException`, also before reclaiming. */
+    * `IllegalArgumentException`, also before reclaiming. Manifests are
+    * reclaimed from one listing of `_manifests`, which also serves the
+    * temp sweep, so a vacuum costs one delete per manifest present
+    * below the horizon, not one per version ever reclaimed. */
   def vacuum(spark: SparkSession, dir: String,
       keepVersions: Int = 1, minAgeMs: Long = 0L,
       protectVersions: Seq[Long] = Nil): Seq[String] = {
@@ -3703,25 +3702,20 @@ object ManifestSink {
     // readback can only move the hint FORWARD, hence >=); (3) only
     // then reclaim manifests.
     writeFloorLoud(f, dir, floorForWrite(f, dir, keepFrom))
-    val latest = new Path(dir, "_latest")
-    writeHint(f, latest, current.toString)
-    // single readback, no retry: writeHint is now an ATOMIC overwrite-
-    // rename, so there is no no-_latest window to race into — once our
-    // rename has returned, a read sees our value or a concurrent
+    writeHint(f, dir, current)
+    // single readback, no retry: a marker refresh creates its name
+    // before pruning anything, so a read sees our value or a concurrent
     // commit's LATER one (commits are monotonic and hint after
     // publishing), both >= current. A readback below current therefore
     // means the hint genuinely failed to persist — fail loudly.
-    val back =
-      scala.util.Try(readSmall(f, latest).trim.toLong).getOrElse(-1L)
+    val back = readHint(f, dir)
     if (back < current) throw new java.io.IOException(
-      s"vacuum at $dir: the _latest hint did not persist (read back " +
+      s"vacuum at $dir: the _latest.d hint did not persist (read back " +
         s"$back, need >= $current) — aborting before reclaiming " +
         "anything so version() probes don't degrade to the full " +
         "listing behind a raised floor")
-    (0L until keepFrom)
-      .filterNot(v => protectSet(v) || chainKeep(v)).foreach { v =>
-      f.delete(new Path(dir, s"_manifests/$v.manifest"), false)
-    }
+    // one listing of _manifests serves both jobs: reclaim the manifests
+    // below the horizon that are neither protected nor chain-kept, and
     // sweep crash-orphaned publish temps — but only ones older than
     // minAgeMs (r16 advice: an ageless sweep could delete an IN-FLIGHT
     // publish temp or a live canHardLink probe file mid-use; the age
@@ -3732,16 +3726,19 @@ object ManifestSink {
     // _manifests directory yet.)
     val cutoff = System.currentTimeMillis() - minAgeMs
     val mdir = new Path(dir, "_manifests")
-    if (f.exists(mdir))
-      f.listStatus(mdir).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          // publish temps, plus capability-probe files a crash between
-          // canHardLink's createFile and its finally left behind
-          (n.endsWith(".tmp") || n.startsWith(".linkprobe.")) &&
-            st.getModificationTime <= cutoff
-        }
-        .foreach(st => f.delete(st.getPath, false))
+    if (f.exists(mdir)) f.listStatus(mdir).foreach { st =>
+      val n = st.getPath.getName
+      val reclaim = n match {
+        case ManifestName(d) =>
+          val v = d.toLong
+          v < keepFrom && !protectSet(v) && !chainKeep(v)
+        // publish temps, plus capability-probe files a crash between
+        // canHardLink's createFile and its finally left behind
+        case _ => (n.endsWith(".tmp") || n.startsWith(".linkprobe.")) &&
+          st.getModificationTime <= cutoff
+      }
+      if (reclaim) f.delete(st.getPath, false)
+    }
     f.listStatus(dataRoot).toSeq
       .filter { st =>
         // a z-compacted commit references SUBdirectories of its batch dir

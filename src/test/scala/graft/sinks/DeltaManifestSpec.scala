@@ -13,6 +13,7 @@ import graft.SparkSpec
   * full-snapshot-per-commit format at every version. */
 class DeltaManifestSpec extends SparkSpec {
   import spark.implicits._
+  import ManifestSinkSpec.{dropHint, plantHint}
 
   private def raw(dir: String, v: Long): Seq[String] =
     new String(Files.readAllBytes(
@@ -125,24 +126,19 @@ class DeltaManifestSpec extends SparkSpec {
       val dir = Files.createTempDirectory("dmanver").toString + "/t"
       (0 until 6).foreach(i => ManifestSink.append(batch(i), dir))
       assert(ManifestSink.version(spark, dir) === 5L)
-      val hint = Paths.get(dir, "_latest")
-      // drop the Hadoop-local CRC sidecar: these writes bypass the
-      // checksummed FS, and a stale sidecar would route every read into
-      // the torn-hint fallback instead of exercising the probe
-      def dropCrc(): Unit =
-        Files.deleteIfExists(Paths.get(dir, "._latest.crc"))
-      // stale hint: probe walks forward to the true head
-      dropCrc(); Files.writeString(hint, "2")
+      // stale name: probe walks forward to the true head
+      plantHint(dir, "2")
       assert(ManifestSink.version(spark, dir) === 5L)
-      // torn hint: unparseable bytes fall back to the listing
-      dropCrc(); Files.writeString(hint, "garbage")
+      // a non-numeric name (what a torn single-file hint would read as)
+      // is ignored: no hint, listing fallback
+      plantHint(dir, "garbage")
       assert(ManifestSink.version(spark, dir) === 5L)
       // missing hint: listing fallback
-      Files.delete(hint)
+      dropHint(dir)
       assert(ManifestSink.version(spark, dir) === 5L)
-      // hint pointing past the head (never written by the engine, but a
-      // byte flip could): nonexistent manifest => listing fallback
-      dropCrc(); Files.writeString(hint, "99")
+      // hint pointing past the head (never written by the engine):
+      // nonexistent manifest => listing fallback
+      plantHint(dir, "3", "99")
       assert(ManifestSink.version(spark, dir) === 5L)
       // and a vacuum refreshes the hint before reclaiming, so the
       // post-vacuum probe anchors on the live region
@@ -172,8 +168,7 @@ class DeltaManifestSpec extends SparkSpec {
       // would walk 1 -> (2 missing) and report a STALE head 1; a writer
       // anchored there would then publish into the reclaimed slot 2,
       // forking history. The floor routes this to the listing.
-      Files.deleteIfExists(Paths.get(dir, "._latest.crc"))
-      Files.writeString(Paths.get(dir, "_latest"), "1")
+      plantHint(dir, "1")
       assert(ManifestSink.version(spark, dir) === 8L)
       // and a commit through the same anchor lands at 9, never 2
       val v = ManifestSink.append(batch(99), dir)
@@ -193,8 +188,7 @@ class DeltaManifestSpec extends SparkSpec {
       // torn-content mode, and creation precedes every delete so no
       // crash point leaves the floor missing — the r14 advice hole)
       val fd = Paths.get(dir, "_vacuum_floor.d")
-      // numeric names only: the Hadoop local FS adds .N.crc sidecars,
-      // which readVersionedFloor ignores exactly like any non-numeric
+      // numeric names only: readers ignore any other name
       def floors(): Seq[String] = Files.list(fd).toArray
         .map(p => Paths.get(p.toString).getFileName.toString).toSeq
         .filter(_.forall(_.isDigit)).sorted
@@ -207,8 +201,7 @@ class DeltaManifestSpec extends SparkSpec {
       // carries its value through the name: probes below it refuse the
       // walk, the listing still finds the true head
       Files.createFile(fd.resolve("42"))
-      Files.deleteIfExists(Paths.get(dir, "._latest.crc"))
-      Files.writeString(Paths.get(dir, "_latest"), "8")
+      plantHint(dir, "8")
       assert(ManifestSink.version(spark, dir) === 8L)
       Files.delete(fd.resolve("42"))
       // legacy single-file floors from earlier builds are max'd in and
@@ -239,24 +232,44 @@ class DeltaManifestSpec extends SparkSpec {
       // positive half: a completed vacuum's hint IS the head (the
       // probe anchors O(1), never the listing)
       ManifestSink.vacuum(spark, dir, keepVersions = 2)
-      assert(Files.readString(Paths.get(dir, "_latest")).trim === "5")
-      // negative half: make the hint unwritable (a non-empty directory
-      // squatting on the name — delete(recursive=false) refuses) and
-      // the vacuum must fail BEFORE reclaiming any manifest: a raised
-      // floor with a lagging hint would put every future version() on
-      // the O(V) listing path (r14 verdict: the Nth silent hint loss)
-      val hint = Paths.get(dir, "_latest")
-      Files.delete(hint)
-      Files.createDirectory(hint)
-      Files.createFile(hint.resolve("squatter"))
+      assert(ManifestSinkSpec.hintNames(dir) === Seq("5"))
+      // negative half: make the hint unwritable (a regular file
+      // squatting on the marker directory's name) and the vacuum must
+      // fail BEFORE reclaiming any manifest: a raised floor with a
+      // lagging hint would put every future version() on the O(V)
+      // listing path (r14 verdict: the Nth silent hint loss)
+      dropHint(dir)
+      val hd = Files.createFile(Paths.get(dir, "_latest.d"))
       intercept[java.io.IOException] {
         ManifestSink.vacuum(spark, dir, keepVersions = 1)
       }
       assert(Files.exists(Paths.get(s"$dir/_manifests/4.manifest")),
         "manifests must survive an aborted vacuum")
-      Files.delete(hint.resolve("squatter")); Files.delete(hint)
+      Files.delete(hd)
       assert(ManifestSink.version(spark, dir) === 5L)
     }
+  }
+
+  test("a legacy single-file _latest hint anchors version() and the " +
+      "first commit replaces it with a marker") {
+    val dir = Files.createTempDirectory("dmanleg").toString + "/t"
+    (0 until 6).foreach(i => ManifestSink.append(batch(i), dir))
+    // a table last written by an earlier build: only `_latest` = 4
+    dropHint(dir)
+    Files.writeString(Paths.get(dir, "_latest"), "4")
+    // a manifest beyond a gap is visible to the listing only, so
+    // reading 5 (not 9) proves version() probed forward from the
+    // legacy hint
+    val far = Paths.get(s"$dir/_manifests/9.manifest")
+    Files.copy(Paths.get(s"$dir/_manifests/5.manifest"), far)
+    assert(ManifestSink.version(spark, dir) === 5L)
+    Files.delete(far)
+    // the first commit by this build writes the marker and deletes the
+    // legacy file
+    assert(ManifestSink.append(batch(6), dir) === 6L)
+    assert(!Files.exists(Paths.get(dir, "_latest")))
+    assert(ManifestSinkSpec.hintNames(dir) === Seq("6"))
+    assert(ManifestSink.read(spark, dir).count() === 7)
   }
 
   test("manifestHeader never exposes the structural delta.base key, " +

@@ -94,42 +94,72 @@ class ManifestSinkSpec extends SparkSpec {
   }
 
   test("_latest is never observed missing across concurrent refreshes") {
-    // writeHint must be an ATOMIC overwrite-rename: the pre-r17
-    // delete-then-rename had a no-_latest window that a concurrent
-    // version() probe or vacuum readback could land in. This spec FAILS
-    // on that code: a refresher thread hammers writeHint while the main
-    // thread polls for existence — with a delete step the poll catches
-    // the gap within a few thousand iterations.
+    // the hint is a marker: each refresh CREATES `_latest.d/<v>` and only
+    // then prunes lower names, so a reader polling while a refresher
+    // thread hammers writeHint must never read "no hint" (-1) and never
+    // see the value go down. A refresh that deleted before creating, or
+    // pruned its own or a higher name, fails here within a few thousand
+    // polls.
     val dir = Files.createTempDirectory("msinkh").toString + "/t"
     ManifestSink.append(Seq(1L).toDF("v"), dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val latest = new org.apache.hadoop.fs.Path(dir, "_latest")
-    val f = latest.getFileSystem(conf)
-    val latestNio = java.nio.file.Paths.get(dir, "_latest")
-    assert(java.nio.file.Files.exists(latestNio))
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(ManifestSink.readHint(f, dir) === 0L)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val refresher = new Thread(() => {
-      var i = 0L
-      while (!stop.get()) { ManifestSink.writeHint(f, latest, i.toString); i += 1 }
+      var i = 1L
+      while (!stop.get()) { ManifestSink.writeHint(f, dir, i); i += 1 }
     })
     refresher.setDaemon(true)
     refresher.start()
-    var missing = 0
+    var last = 0L
+    var bad = Vector.empty[(Long, Long)] // (previous read, this read)
     val deadline = System.nanoTime() + 3_000_000_000L // 3 s of polling
     try {
-      while (System.nanoTime() < deadline && missing == 0) {
-        var k = 0
-        while (k < 10000) {
-          if (!java.nio.file.Files.exists(latestNio)) missing += 1
-          k += 1
-        }
+      while (System.nanoTime() < deadline && bad.isEmpty) {
+        val h = ManifestSink.readHint(f, dir)
+        if (h < last) bad :+= (last -> h)
+        last = math.max(last, h)
       }
     } finally { stop.set(true); refresher.join(5000) }
-    assert(missing === 0,
-      s"_latest observed missing $missing time(s) — writeHint is not atomic")
-    // the hint content is always a whole value (rename is all-or-nothing)
-    val back = new String(java.nio.file.Files.readAllBytes(latestNio), "UTF-8")
-    assert(back.trim.nonEmpty && back.trim.forall(_.isDigit), s"torn hint: '$back'")
+    assert(bad.isEmpty, s"hint went missing or backwards: $bad")
+    assert(last > 0L, "the refresher never advanced the hint")
+    // pruning keeps the marker directory at one or two names
+    assert(ManifestSinkSpec.hintNames(dir).size <= 2)
+  }
+
+  test("a commit or vacuum never replaces a file: every path keeps its " +
+      "inode") {
+    // refreshing the hint (or any metadata) by renaming over an existing
+    // file costs ~50 ms per rename on ext4; every table file is created
+    // under a fresh name instead. Snapshot path -> inode around each
+    // operation: a path present on both sides must be the same file.
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("msinki").toString + "/t"
+    def inodes(): Map[String, AnyRef] = {
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getAttribute(p, "unix:ino")).toMap
+      finally s.close()
+    }
+    ManifestSink.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir)
+    val ops = Seq[(String, () => Any)](
+      "append" -> (() =>
+        ManifestSink.append(Seq((3L, "c")).toDF("k", "v"), dir)),
+      "replace" -> (() => ManifestSink.replace(
+        ManifestSink.read(spark, dir).filter($"k" >= 2L), dir)),
+      "merge" -> (() => ManifestSink.merge(
+        Seq((3L, "C"), (4L, "d")).toDF("k", "v"), dir, Seq("k"))),
+      "vacuum" -> (() => ManifestSink.vacuum(spark, dir)))
+    ops.foreach { case (name, op) =>
+      val before = inodes()
+      op()
+      val after = inodes()
+      val replaced = before.keySet.intersect(after.keySet)
+        .filter(p => before(p) != after(p))
+      assert(replaced.isEmpty, s"$name replaced ${replaced.toSeq.sorted}")
+    }
+    assert(ManifestSink.read(spark, dir).count() === 3)
   }
 
   test("crash between manifest publish and hint write loses nothing") {
@@ -138,7 +168,7 @@ class ManifestSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("msinkc").toString + "/t"
     ManifestSink.append(Seq(1L, 2L).toDF("v"), dir)
     ManifestSink.append(Seq(3L).toDF("v"), dir)
-    Files.delete(java.nio.file.Paths.get(dir, "_latest"))
+    ManifestSinkSpec.dropHint(dir)
     // recovery: version comes from the manifest listing
     assert(ManifestSink.version(spark, dir) === 1L)
     assert(ManifestSink.read(spark, dir).count() === 3)
@@ -154,9 +184,8 @@ class ManifestSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("msinks").toString + "/t"
     ManifestSink.append(Seq(1L).toDF("v"), dir)
     ManifestSink.append(Seq(2L).toDF("v"), dir)
-    // hint rolled back (torn write / crashed overwrite): listing wins
-    Files.write(java.nio.file.Paths.get(dir, "_latest"),
-      "0".getBytes("UTF-8"))
+    // hint rolled back to a lower name: the probe walks forward from it
+    ManifestSinkSpec.plantHint(dir, "0")
     assert(ManifestSink.version(spark, dir) === 1L)
     assert(ManifestSink.read(spark, dir).count() === 2)
   }
@@ -220,7 +249,7 @@ class ManifestSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("msinkmc").toString + "/t"
     ManifestSink.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir)
     ManifestSink.merge(Seq((2L, "B")).toDF("k", "v"), dir, Seq("k"))
-    Files.delete(java.nio.file.Paths.get(dir, "_latest"))
+    ManifestSinkSpec.dropHint(dir)
     assert(ManifestSink.version(spark, dir) === 1L)
     val got = ManifestSink.read(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -1859,5 +1888,34 @@ class ManifestSinkSpec extends SparkSpec {
     assert(h(0).getAs[Long]("rows_added") === 6L)
     assert(h(1).getAs[String]("kind") === "append")
     assert(h(1).getAs[Long]("rows_added") === 1L)
+  }
+}
+
+object ManifestSinkSpec {
+  import java.nio.file.Paths
+  import scala.jdk.CollectionConverters._
+
+  /** The names under a table's `_latest.d` hint directory. */
+  def hintNames(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir, "_latest.d"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  /** Remove the table's head hint, as a crash before its first refresh
+    * would leave it. */
+  def dropHint(dir: String): Unit = {
+    val hd = Paths.get(dir, "_latest.d")
+    if (Files.isDirectory(hd)) {
+      hintNames(dir).foreach(n => Files.delete(hd.resolve(n)))
+      Files.delete(hd)
+    }
+  }
+
+  /** Replace the table's head hint with exactly the names `names`. */
+  def plantHint(dir: String, names: String*): Unit = {
+    dropHint(dir)
+    val hd = Files.createDirectories(Paths.get(dir, "_latest.d"))
+    names.foreach(n => Files.createFile(hd.resolve(n)))
   }
 }
